@@ -38,6 +38,14 @@ def tail(values: list[float]) -> dict:
             "beyond": int(n * (100 - p) / 100.0)}
 
 
+def unit_count(seconds: float, unit_s: float, least: int = 1) -> int:
+    """How many units a run times: ``--seconds`` over the nominal length of
+    one unit on a 4-core box, and at least ``least``. It depends only on the
+    arguments, so the mix of cold and warm units is the same on every run and
+    every commit, however fast the machine or the program is."""
+    return max(least, int(round(seconds / unit_s)))
+
+
 def median(values: list[float]) -> float:
     return statistics.median(values) if values else float("nan")
 

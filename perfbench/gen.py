@@ -16,13 +16,16 @@ import numpy as np
 # ---------------------------------------------------------------- daily ingest
 
 # (name, rows): a few large fact tables and some small dimension tables,
-# the shape of a daily extract cut down to six files so that a day fits in
-# one run.
-INGEST_LARGE = (("encounters", 6000), ("lab_results", 6000), ("medications", 6000))
-INGEST_SMALL = (("dim_site", 40), ("dim_provider", 600), ("dim_drug", 1200))
-# large tables number their rows from here: the sampled prefix (the first
-# 500 rows of a 6000-row table) stays within smallint, the rest pass 32767
-LARGE_ID_START = 31_000
+# the shape of a daily extract cut down to five files so that a day fits in
+# one run. The large tables hold more than 10,000 rows, so inference samples
+# them as it samples the reference's 200k-row tables: the first 1000 rows.
+INGEST_LARGE = (("encounters", 11_000), ("lab_results", 11_000), ("medications", 11_000))
+INGEST_SMALL = (("dim_site", 40), ("dim_provider", 600))
+# the rows inference classifies on a large table
+SAMPLED_PREFIX = 1000
+# large tables number their rows from here: the sampled prefix stays within
+# smallint, the rest of the column passes 32767
+LARGE_ID_START = 31_001
 MALFORMED_FRAC = 0.001
 _BASE_DAY = dt.date(2021, 3, 1)
 
@@ -38,15 +41,27 @@ def _ts_strings(rng, n, base, span_days, midnight):
     return np.char.replace(out, "T", " ")
 
 
+# what each generated column holds, so the check can compare a typed cell
+# with its source text: "int", "float", "bool" or "text" (compared as text:
+# identifiers, labels, dates and timestamps)
+INGEST_KINDS = {
+    "row_id": "int", "mrn": "text", "flag_01": "int", "active_tf": "bool",
+    "verified": "bool", "event_date": "text", "event_ts": "text", "amount": "float",
+    "label": "text", "count_i32": "int", "ref_i64": "int", "note": "text",
+}
+# the column that identifies a row: distinct, never empty, typed as text
+INGEST_KEY = "mrn"
+
+
 def _ingest_columns(rng, name: str, n: int, large: bool) -> dict[str, np.ndarray]:
     """One table's columns as string arrays, covering every inference label.
     On a large table ``row_id`` counts up from LARGE_ID_START, so it passes
-    32767 after the first 1000 rows (the sampled prefix)."""
+    32767 after the sampled prefix."""
     ids = np.arange(1, n + 1) + (LARGE_ID_START - 1 if large else 0)
     cols: dict[str, np.ndarray] = {
         "row_id": ids.astype(str),
-        # zero-padded identifier -> text
-        "mrn": np.char.zfill(rng.integers(1, 10**7, n).astype(str), 9),
+        # zero-padded distinct identifier -> text
+        "mrn": np.char.zfill((rng.choice(10**8, n, replace=False) + 1).astype(str), 9),
         # 0/1 flag -> smallint
         "flag_01": rng.integers(0, 2, n).astype(str),
         # t/f and true/false -> boolean
@@ -79,7 +94,8 @@ def _malformed_line(kind: str, good: str) -> str:
 
 def make_ingest_day(out_dir: str, seed: int, day: int) -> dict:
     """Write one day's manifest of CSVs; return the ledger:
-    {table: {"path", "rows", "malformed", "nonempty": {col: n}, "bytes"}}."""
+    {table: {"path", "rows", "malformed", "nonempty": {col: n}, "bytes",
+    "cells": {col: source text of each well-formed row}}}."""
     rng = np.random.default_rng([seed, 101, day])
     os.makedirs(out_dir, exist_ok=True)
     ledger: dict[str, dict] = {}
@@ -90,7 +106,7 @@ def make_ingest_day(out_dir: str, seed: int, day: int) -> dict:
             arrs = [cols[c] for c in names]
             lines = [",".join(row) for row in zip(*arrs)]
             n_bad = int(round(n * MALFORMED_FRAC)) if large else 0
-            bad_at = sorted(rng.choice(np.arange(1001, n), n_bad, replace=False)) \
+            bad_at = sorted(rng.choice(np.arange(SAMPLED_PREFIX + 1, n), n_bad, replace=False)) \
                 if n_bad else []
             for j, i in enumerate(bad_at):
                 kind = "quote" if j % 2 == 0 else "arity"
@@ -104,7 +120,8 @@ def make_ingest_day(out_dir: str, seed: int, day: int) -> dict:
                 fh.write(",".join(names) + "\n")
                 fh.write("\n".join(lines) + "\n")
             ledger[name] = {"path": path, "rows": n - len(bad), "malformed": len(bad),
-                            "nonempty": nonempty, "bytes": os.path.getsize(path)}
+                            "nonempty": nonempty, "bytes": os.path.getsize(path),
+                            "cells": {c: cols[c][keep] for c in names}}
     return ledger
 
 

@@ -2,10 +2,11 @@
 
     python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1
 
-Run from the root of a checkout. Each run sets up three times (Spark session
-start plus input generation; the median is ``setup_s``), then drives the
-workload in a closed loop from this one process on ``local[nproc]`` until
-``--seconds`` of measured work have passed, then checks the outputs. All
+Run from the root of a checkout. Each run sets up once (a fresh JVM's Spark
+session start plus input generation: ``setup_s``), then drives the workload
+in a closed loop from this one process on ``local[nproc]`` for a fixed
+number of units that ``--seconds`` alone decides (never the speed of the
+machine or the program), then checks the outputs. All
 state (warehouse, Spark local dirs, temp files, versioned tables, generated
 inputs) lives under ``.perfbench_work/`` in the checkout and is removed at
 the end. The last stdout line is the JSON result; the line before it names
@@ -19,7 +20,6 @@ import argparse
 import json
 import os
 import shutil
-import statistics
 import sys
 import time
 import traceback
@@ -28,21 +28,11 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 import metrics  # noqa: E402
+from combined import WORKLOADS  # noqa: E402
 from common import Ctx  # noqa: E402
 from spans import Tracer  # noqa: E402
 
-SETUPS = 3
 PACKAGE = "covid_19_data_engineering_spark"
-
-
-def workloads():
-    from wl_curation import CorpusCuration
-    from wl_ingest import DailyIngest
-    from wl_queries import WarehouseQueries
-    from wl_upserts import VersionedUpserts
-
-    return {w.name: w for w in (DailyIngest, WarehouseQueries, CorpusCuration,
-                                VersionedUpserts)}
 
 
 def isolate(work: str) -> dict[str, str]:
@@ -90,6 +80,18 @@ def shut_down(spark) -> None:
             proc.wait()
 
 
+def cpu_jiffies() -> tuple[int, int]:
+    """(steal, total) jiffies of all CPUs from /proc/stat: the time the
+    hypervisor ran something else while this machine wanted to run, which
+    inflates every wall-clock figure of the run."""
+    try:
+        with open("/proc/stat", encoding="ascii") as fh:
+            f = [int(x) for x in fh.readline().split()[1:]]
+    except (OSError, ValueError):
+        return 0, 0
+    return (f[7] if len(f) > 7 else 0), sum(f)
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
@@ -103,9 +105,8 @@ def main(argv: list[str] | None = None) -> int:
         print(f"perfbench: no {PACKAGE} package under {root}; run from a checkout",
               file=sys.stderr)
         return 2
-    table = workloads()
-    if args.workload not in table:
-        print(f"perfbench: unknown workload {args.workload!r}; have {sorted(table)}",
+    if args.workload not in WORKLOADS:
+        print(f"perfbench: unknown workload {args.workload!r}; have {sorted(WORKLOADS)}",
               file=sys.stderr)
         return 2
     sys.path.insert(0, root)
@@ -117,20 +118,17 @@ def main(argv: list[str] | None = None) -> int:
     conf = isolate(work)
     tr = Tracer(enabled=bool(args.trace))
     ctx = Ctx(work, args.seed, tr, nproc)
-    wl = table[args.workload]()
-    setups: list[float] = []
+    wl = WORKLOADS[args.workload]()
     ok = True
+    steal0, total0 = cpu_jiffies()
     try:
-        for _ in range(SETUPS):
-            if ctx.spark is not None:
-                ctx.spark.stop()
-            t0 = time.perf_counter()
-            ctx.spark = start_session(ctx, conf)
-            wl.generate(ctx)
-            setups.append(time.perf_counter() - t0)
+        t0 = time.perf_counter()
+        ctx.spark = start_session(ctx, conf)
+        wl.generate(ctx)
+        setup_s = time.perf_counter() - t0
         tr.bind(ctx.spark)
         wl.install(ctx)
-        wl.run(ctx, args.seconds)
+        wl.run(ctx, wl.units(args.seconds))
         tr.unwrap_all()
         wl.check(ctx)
         e2e, side = wl.metrics(ctx)
@@ -160,15 +158,17 @@ def main(argv: list[str] | None = None) -> int:
                           "metrics": {}}))
         return 1
 
-    e2e["setup_s"] = statistics.median(setups)
+    e2e["setup_s"] = setup_s
     side["error_rate"] = (failed / attempted, f"fraction of {attempted}")
-    side["setup_cold_s"] = (setups[0], "s")
+    steal1, total1 = cpu_jiffies()
+    side["steal_frac"] = ((steal1 - steal0) / max(total1 - total0, 1), "fraction")
     if tr.enabled:
         layers.update({
             "session.start_s": tr.median_s("session.start"),
             "trace.spans": float(n_spans),
             "trace.overhead_s": overhead,
             "trace.op_p50_s": e2e["op_p50_s"],
+            "trace.work_s": e2e["work_s"],
         })
         out_dir = os.path.join(root, ".perfbench_out")
         os.makedirs(out_dir, exist_ok=True)
@@ -176,12 +176,10 @@ def main(argv: list[str] | None = None) -> int:
         tr.write(span_file)
         side["span_file"] = (os.path.relpath(span_file, root), "path")
         side["trace_overhead_s"] = (overhead, "s")
-        # every per-layer metric of BENCHMARK.json (0 for a layer this
-        # workload does not touch), plus the by-hand layers it reaches
-        units = {m[0]: m[1] for m in metrics.PER_LAYER + metrics.BY_HAND}
-        names = [m[0] for m in metrics.PER_LAYER] + \
-            [m[0] for m in metrics.BY_HAND if m[0] in layers]
-        values = {n: float(layers.get(n, 0.0)) for n in names}
+        # every per-layer metric of BENCHMARK.json, 0 for a layer this
+        # workload does not touch
+        units = {m[0]: m[1] for m in metrics.PER_LAYER}
+        values = {m[0]: float(layers.get(m[0], 0.0)) for m in metrics.PER_LAYER}
     else:
         units = {n: u for n, (u, _, _) in metrics.END_TO_END.items()}
         values = {n: float(e2e[n]) for n in metrics.END_TO_END}

@@ -9,6 +9,7 @@ import json
 import os
 import sys
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -21,6 +22,7 @@ import metrics  # noqa: E402
 from common import percentile, tail  # noqa: E402
 from spans import Tracer  # noqa: E402
 from wl_curation import CorpusCuration, check_manifest  # noqa: E402
+from combined import WORKLOADS, curation_upserts, ingest_queries  # noqa: E402
 from wl_ingest import DailyIngest, check_table  # noqa: E402
 from wl_queries import WarehouseQueries, compare, deck, spark_frame  # noqa: E402
 from wl_upserts import VersionedUpserts, compare_rows  # noqa: E402
@@ -46,13 +48,16 @@ def test_ingest_day_covers_every_inference_label(tmp_path):
     from covid_19_data_engineering_spark.inference import (
         classify_value,
         resolve_column_type,
+        sample_limit,
     )
 
     led = gen.make_ingest_day(str(tmp_path), 3, 0)
     path = led["encounters"]["path"]
     lines = open(path).read().splitlines()
     header = lines[0].split(",")
-    prefix = [ln.split(",") for ln in lines[1:501]]
+    assert led["encounters"]["rows"] + led["encounters"]["malformed"] > 10_000
+    assert sample_limit(led["encounters"]["rows"]) == gen.SAMPLED_PREFIX
+    prefix = [ln.split(",") for ln in lines[1:gen.SAMPLED_PREFIX + 1]]
     types = {c: resolve_column_type({classify_value(r[i]) for r in prefix if r[i]})
              for i, c in enumerate(header)}
     assert set(types.values()) >= {"text", "smallint", "integer", "bigint", "numeric",
@@ -60,6 +65,9 @@ def test_ingest_day_covers_every_inference_label(tmp_path):
     # the sampled prefix says smallint, the rest of the column passes 32767
     assert types["row_id"] == "smallint"
     assert int(lines[-1].split(",")[0]) > 32767
+    assert set(gen.INGEST_KINDS) == set(header)
+    keys = led["encounters"]["cells"][gen.INGEST_KEY]
+    assert len(set(keys)) == len(keys) == led["encounters"]["rows"]
 
 
 def test_warehouse_deterministic_and_seeded(tmp_path):
@@ -91,11 +99,20 @@ def test_cdc_stream_deterministic_seeded_and_recent_leaning():
     assert gen.make_orders_rows(1, 50) == gen.make_orders_rows(1, 50)
 
 
-def test_query_round_is_weighted():
+def test_query_round_runs_every_shape_once():
     from wl_queries import SHAPES
 
-    d = deck()
-    assert {q: d.count(q) for q in SHAPES} == SHAPES and d == deck()
+    assert deck() == list(SHAPES) and len(set(SHAPES)) == len(SHAPES)
+
+
+def test_unit_counts_depend_only_on_seconds():
+    from common import unit_count
+
+    assert unit_count(10, 5.0, least=2) == 2 and unit_count(30, 5.0, least=2) == 6
+    assert unit_count(1, 16.0) == 1
+    for cls in (DailyIngest, WarehouseQueries, CorpusCuration, VersionedUpserts):
+        assert cls().units(10) == cls().units(10) >= 1
+    assert curation_upserts().units(10) == [1, 1] and ingest_queries().units(10) == [1, 1]
 
 
 # ---------------------------------------------------------------- metrics
@@ -120,22 +137,39 @@ class _Ctx:
         self.tr = Tracer(enabled=True)
 
 
-@pytest.mark.parametrize("cls", [DailyIngest, WarehouseQueries, CorpusCuration,
-                                 VersionedUpserts])
-def test_every_printed_metric_is_declared(cls):
-    wl = cls()
+@pytest.mark.parametrize("make", WORKLOADS.values())
+def test_every_printed_metric_is_declared(make):
+    wl = make()
     declared = {m[0] for m in metrics.PER_LAYER}
-    listed = {w["name"] for w in _bench()["workloads"]}
-    allowed = declared if cls.name in listed else declared | {m[0] for m in metrics.BY_HAND}
-    assert set(wl.layer_metrics(_Ctx())) <= allowed
+    assert set(wl.layer_metrics(_Ctx())) <= declared
     assert {"session.start_s", "trace.spans", "trace.overhead_s", "trace.op_p50_s"} <= declared
 
 
-def test_end_to_end_metrics_are_declared(monkeypatch):
-    wl = WarehouseQueries()
-    wl.lat, wl.spent = [0.5, 0.7, 0.9], 2.1
+def test_every_layer_is_measured_by_a_listed_workload():
+    listed = {w["name"] for w in _bench()["workloads"]}
+    assert listed == set(metrics.ALL) == set(WORKLOADS)
+    by_layer = {}
+    for name, _, _, layer, _, workload in metrics.PER_LAYER:
+        by_layer.setdefault(layer, set()).add(workload)
+    for layer in ("session", "sources.csv", "inference", "lifecycle", "pipeline",
+                  "plans.relational", "plans.tpch", "plans.advanced", "sources.versioned",
+                  "sources.incremental", "operators.curation", "operators.clustering",
+                  "operators.semdedup", "operators.similarity"):
+        assert by_layer[layer] <= listed | {"all"}, layer
+    for name, make in WORKLOADS.items():
+        mine = {m[0] for m in metrics.PER_LAYER if m[5] == name}
+        assert mine <= set(make().layer_metrics(_Ctx())), name
+
+
+def test_end_to_end_metrics_are_declared():
+    wl = ingest_queries()
+    ing, qry = wl.parts
+    ing.days = [{"ledger": {"t": {"rows": 10, "malformed": 1}}, "s": 3.0}]
+    ing.loads = [1.0, 2.0]
+    qry.lat, qry.spent = [0.5, 0.7, 0.9], 2.1
     e2e, side = wl.metrics(None)
     assert set(e2e) | {"setup_s"} == set(metrics.END_TO_END)
+    assert e2e["op_p50_s"] == 0.7 and e2e["work_s"] == pytest.approx(5.1)
     assert all(isinstance(u, str) for _, u in side.values())
 
 
@@ -149,13 +183,45 @@ def test_tail_picks_highest_percentile_with_ten_beyond():
 
 # ------------------------------------------------ checks catch one bad row
 
-def test_ingest_check_catches_a_dropped_or_changed_row():
-    want = {"rows": 100, "malformed": 2, "nonempty": {"a": 100, "b": 60}}
-    assert check_table(want, 100, 2, 100, {"a": 100, "b": 60}) == []
-    assert check_table(want, 100, 2, 100, {"a": 40, "b": 60}) == []  # nulled: a metric
-    assert check_table(want, 99, 2, 99, {"a": 99, "b": 60})          # dropped row
-    assert check_table(want, 100, 1, 100, {"a": 100, "b": 60})       # lost quarantine row
-    assert check_table(want, 100, 2, 100, {"a": 100, "b": 61})       # changed value
+def _ingest_want():
+    cells = {"mrn": np.array(["001", "002", "003"]),
+             "row_id": np.array(["32766", "32767", "40000"]),
+             "amount": np.array(["1.50", "20.00", "3.25"]),
+             "active_tf": np.array(["t", "f", "true"]),
+             "event_ts": np.array(["2021-03-01 10:00:00", "", "2021-03-02 00:00:00"])}
+    want = {"rows": 3, "malformed": 1, "cells": cells}
+    got = {"mrn": ["002", "001", "003"], "row_id": ["32767", "32766", None],
+           "amount": ["20.0", "1.5", "3.25"], "active_tf": ["false", "true", "true"],
+           "event_ts": [None, "2021-03-01 10:00:00", "2021-03-02 00:00:00"]}
+    return want, got
+
+
+def test_ingest_check_passes_typed_values_and_counts_nulled_cells():
+    want, got = _ingest_want()
+    # the row_id past smallint landed NULL: measured, not failed
+    assert check_table(want, 3, 1, got) == ([], 1)
+
+
+def test_ingest_check_catches_a_dropped_row():
+    want, got = _ingest_want()
+    dropped = {c: v[:2] for c, v in got.items()}
+    assert check_table(want, 2, 1, dropped)[0]
+    assert check_table(want, 3, 0, got)[0]                          # lost quarantine row
+
+
+@pytest.mark.parametrize("col,i,value", [
+    ("amount", 0, "20.01"),                     # a decimal rounded
+    ("row_id", 1, "32765"),                     # an integer shifted
+    ("active_tf", 2, "false"),                  # a flag flipped
+    ("event_ts", 1, "2021-03-01 10:00:01"),     # a timestamp moved
+    ("event_ts", 0, "2021-03-01 00:00:00"),     # a NULL source cell filled in
+    ("mrn", 2, "03"),                           # an identifier lost its padding
+])
+def test_ingest_check_catches_one_changed_value(col, i, value):
+    want, got = _ingest_want()
+    got[col][i] = value
+    problems, _ = check_table(want, 3, 1, got)
+    assert problems
 
 
 def test_query_check_catches_a_dropped_or_changed_row():

@@ -12,17 +12,17 @@ import time
 import numpy as np
 
 import gen
-from common import median, tail
+from common import median, tail, unit_count
 
 SHARD_DOCS = 200
 SHARD_VECS = 150
 N_QUERIES = 5
 STAGES = ("curation", "clustering", "semdedup", "similarity")
+# nominal length of one shard on a 4-core box, cold JVM included
+SHARD_S = 25.0
 
 
 class CorpusCuration:
-    name = "corpus_curation"
-
     def __init__(self):
         self.shards: list[dict] = []     # ledger + per-shard results
         self.lat: list[float] = []       # per-stage latencies
@@ -38,7 +38,10 @@ class CorpusCuration:
     def install(self, ctx) -> None:
         pass
 
-    def run(self, ctx, seconds: float) -> None:
+    def units(self, seconds: float) -> int:
+        return unit_count(seconds, SHARD_S)
+
+    def run(self, ctx, shards: int) -> None:
         import pyspark.sql.functions as F
 
         from covid_19_data_engineering_spark.operators import (
@@ -49,8 +52,7 @@ class CorpusCuration:
         )
 
         spark, tr = ctx.spark, ctx.tr
-        shard = 0
-        while self.spent < seconds:
+        for shard in range(shards):
             led = self._ledger0 if shard == 0 else gen.make_corpus_shard(
                 ctx.fresh_dir("in", f"shard{shard}"), ctx.seed, shard, SHARD_DOCS, SHARD_VECS)
             docs = spark.read.parquet(os.path.join(led["dir"], "documents.parquet"))
@@ -82,7 +84,6 @@ class CorpusCuration:
             if tr.enabled:
                 self._diagnose(docs, corpus, queries, out)
             self._check_shard(ctx, shard, led, out)
-            shard += 1
 
     def _diagnose(self, docs, corpus, queries, out) -> None:
         """Traced run only: LSH candidate pairs per pair at or above the
@@ -129,19 +130,20 @@ class CorpusCuration:
                 hit += near_pair_caught(status, a, b)
         return hit / max(total, 1)
 
-    def metrics(self, ctx) -> tuple[dict, dict]:
+    @property
+    def op_lat(self) -> list[float]:
+        return self.lat
+
+    def metrics(self, ctx) -> dict:
         shard_s = [sum(self.lat[i:i + len(STAGES)]) for i in range(0, len(self.lat), len(STAGES))]
         t = tail(self.lat)
-        e2e = {"op_p50_s": median(self.lat), "op_tail_s": t["value"],
-               "items_per_s": self.docs / self.spent}
-        side = {"curation_docs_per_s": (self.docs / self.spent, "1/s"),
+        return {"curation_docs_per_s": (self.docs / self.spent, "1/s"),
                 "near_dup_recall": (self.near_dup_recall(), "fraction"),
                 "shard_p50_s": (median(shard_s), "s"),
                 "stage_tail_s": (t["value"], f"s@p{t['pct']},n={t['n']},beyond={t['beyond']}"),
                 "manifest_missing_docs": (sum(missing_docs(s["out"]["clustering"], s["ledger"])
                                               for s in self.shards), "count"),
                 "shards": (len(self.shards), "count")}
-        return e2e, side
 
     def layer_metrics(self, ctx) -> dict:
         tr = ctx.tr

@@ -9,15 +9,14 @@ import os
 import time
 
 import gen
-from common import dir_bytes, median, tail
+from common import dir_bytes, median, tail, unit_count
 
 SCHEMA = "daily"
-MIN_DAYS = 2
+# nominal length of one day on a 4-core box, cold JVM included
+DAY_S = 10.0
 
 
 class DailyIngest:
-    name = "daily_ingest"
-
     def __init__(self):
         self.days: list[dict] = []       # per day: ledger, seconds
         self.loads: list[float] = []     # per-table load latency
@@ -55,7 +54,10 @@ class DailyIngest:
 
     # --------------------------------------------------------------- run
 
-    def run(self, ctx, seconds: float) -> None:
+    def units(self, seconds: float) -> int:
+        return unit_count(seconds, DAY_S)
+
+    def run(self, ctx, days: int) -> None:
         from covid_19_data_engineering_spark import lifecycle, pipeline
 
         spark = ctx.spark
@@ -70,12 +72,8 @@ class DailyIngest:
             promoted.append(time.perf_counter())
             return out
         lifecycle.promote = stamped
-        spent, day = 0.0, 0
         try:
-            # at least two days: in a fresh JVM the first day is mostly
-            # first-use compilation, and timing it alone made op_p50_s swing
-            # by 30% between runs; a cold and a warm day together hold steady
-            while day < MIN_DAYS or spent < seconds:
+            for day in range(days):
                 ledger = self._ledger0 if day == 0 else gen.make_ingest_day(
                     ctx.fresh_dir("in", f"day{day}"), ctx.seed, day)
                 paths = [v["path"] for v in ledger.values()]
@@ -86,7 +84,6 @@ class DailyIngest:
                 for r in results:
                     lifecycle.snapshot_history(spark, SCHEMA, r.table)
                 t1 = time.perf_counter()
-                spent += t1 - t0
                 prev = t0
                 for t in promoted:
                     self.loads.append(t - prev)
@@ -94,15 +91,15 @@ class DailyIngest:
                 self.days.append({"ledger": ledger, "s": t1 - t0})
                 ctx.tr.unit = {}
                 self._check_day(ctx, day, ledger, results)
-                day += 1
         finally:
             lifecycle.promote = inner_promote
 
     # ------------------------------------------------------------ checks
 
     def _check_day(self, ctx, day: int, ledger: dict, results) -> None:
-        """Outside the timed region: landed and quarantined rows against the
-        ledger, and the cells the cast turned NULL."""
+        """Outside the timed region: landed, prod and quarantined rows and
+        every prod cell against the ledger, and the cells the cast turned
+        NULL."""
         import pyspark.sql.functions as F
 
         spark = ctx.spark
@@ -114,16 +111,15 @@ class DailyIngest:
             if r is None:
                 ctx.fail(f"day {day}: {table} not loaded")
                 continue
-            cols = list(want["nonempty"])
-            row = spark.table(f"{SCHEMA}.{table}").agg(
-                F.count(F.lit(1)).alias("_n"),
-                *[F.count(F.col(c)).alias(c) for c in cols]).first()
-            problems = check_table(want, r.rows_loaded, r.rows_quarantined, row["_n"],
-                                   {c: row[c] for c in cols})
+            prod = spark.table(f"{SCHEMA}.{table}")
+            cols = [c for c in want["cells"] if c in prod.columns]
+            frame = prod.select([F.col(c).cast("string") for c in cols]).toPandas()
+            problems, nulled = check_table(want, r.rows_loaded, r.rows_quarantined,
+                                           {c: frame[c].tolist() for c in cols})
             for p in problems:
                 ctx.fail(f"day {day}: {table}: {p}")
             self.nonempty += sum(want["nonempty"].values())
-            self.nulled += sum(max(0, want["nonempty"][c] - row[c]) for c in cols)
+            self.nulled += nulled
             self.history_rows[table] = self.history_rows.get(table, 0) + want["rows"]
             self.quarantine_rows[table] = self.quarantine_rows.get(table, 0) + want["malformed"]
 
@@ -144,20 +140,24 @@ class DailyIngest:
 
     # ----------------------------------------------------------- metrics
 
-    def metrics(self, ctx) -> tuple[dict, dict]:
+    @property
+    def op_lat(self) -> list[float]:
+        return self.loads
+
+    @property
+    def spent(self) -> float:
+        return sum(d["s"] for d in self.days)
+
+    def metrics(self, ctx) -> dict:
         rows = sum(v["rows"] + v["malformed"] for d in self.days for v in d["ledger"].values())
-        spent = sum(d["s"] for d in self.days)
         t = tail(self.loads)
-        e2e = {"op_p50_s": median(self.loads), "op_tail_s": t["value"],
-               "items_per_s": rows / spent}
-        side = {
-            "ingest_rows_per_s": (rows / spent, "1/s"),
+        return {
+            "ingest_rows_per_s": (rows / self.spent, "1/s"),
             "table_load_p50_s": (median(self.loads), "s"),
             "table_load_tail_s": (t["value"], f"s@p{t['pct']},n={t['n']},beyond={t['beyond']}"),
             "ingest_cells_nulled_frac": (self.nulled / max(self.nonempty, 1), "fraction"),
             "days": (len(self.days), "count"),
         }
-        return e2e, side
 
     def layer_metrics(self, ctx) -> dict:
         tr = ctx.tr
@@ -187,24 +187,72 @@ class DailyIngest:
         }
 
 
-def check_table(want: dict, loaded: int, quarantined: int, prod_rows: int,
-                nonnull: dict[str, int]) -> list[str]:
-    """Compare one loaded table with its ledger entry. Cells the cast turned
-    NULL are measured, not failed; a column with more non-NULL cells than the
-    source had non-empty ones is a failure."""
+def _as_bool(text: str) -> bool:
+    return {"t": True, "true": True, "f": False, "false": False}[text.lower()]
+
+
+# how a source cell and its typed twin (cast back to text) are compared
+_PARSE = {"int": int, "float": float, "bool": _as_bool, "text": str}
+
+
+def _same(kind: str, source: str, typed: str) -> bool:
+    parse = _PARSE[kind]
+    try:
+        return parse(source) == parse(typed)
+    except (ValueError, KeyError):
+        return False
+
+
+def check_table(want: dict, loaded: int, quarantined: int,
+                got: dict[str, list]) -> tuple[list[str], int]:
+    """Compare one loaded table with its ledger entry. ``got`` maps each
+    source column to the prod table's cells cast to text (None for NULL).
+    Rows are matched on ``gen.INGEST_KEY``; every non-NULL cell must hold its
+    source value. Cells the cast turned NULL are measured, not failed: the
+    second value returned counts them. A cell that is non-NULL where the
+    source is empty is a failure."""
     problems = []
     if loaded != want["rows"]:
         problems.append(f"loaded {loaded} rows, ledger {want['rows']}")
-    if prod_rows != want["rows"]:
-        problems.append(f"prod holds {prod_rows} rows, ledger {want['rows']}")
     if quarantined != want["malformed"]:
         problems.append(f"quarantined {quarantined} rows, ledger {want['malformed']}")
-    for c, n in want["nonempty"].items():
-        if c not in nonnull:
+    cells, key = want["cells"], gen.INGEST_KEY
+    if key not in got:
+        return problems + [f"key column {key} missing"], 0
+    if len(got[key]) != want["rows"]:
+        problems.append(f"prod holds {len(got[key])} rows, ledger {want['rows']}")
+    where = {k: i for i, k in enumerate(got[key])}
+    if len(where) != len(got[key]):
+        problems.append(f"{len(got[key]) - len(where)} duplicate {key} values")
+    src_keys = cells[key]
+    missing = [k for k in src_keys if k not in where]
+    if missing:
+        problems.append(f"{len(missing)} source rows missing; first {key}={missing[0]}")
+    nulled = 0
+    for c, src in cells.items():
+        if c not in got:
             problems.append(f"column {c} missing")
-        elif nonnull[c] > n:
-            problems.append(f"column {c} has {nonnull[c]} non-NULL cells, source {n}")
-    return problems
+            continue
+        kind, col = gen.INGEST_KINDS[c], got[c]
+        changed, appeared, first = 0, 0, None
+        for k, s in zip(src_keys, src):
+            i = where.get(k)
+            if i is None:
+                continue
+            v = col[i]
+            if v is None:
+                nulled += s != ""
+            elif s == "":
+                appeared += 1
+            elif not _same(kind, s, v):
+                changed += 1
+                first = first or (k, s, v)
+        if appeared:
+            problems.append(f"column {c}: {appeared} cells non-NULL where the source is empty")
+        if changed:
+            problems.append(f"column {c}: {changed} cells differ from the source; "
+                            f"first {key}={first[0]}: {first[1]!r} -> {first[2]!r}")
+    return problems, nulled
 
 
 class _TimedQuarantine:

@@ -1,6 +1,7 @@
-"""warehouse_queries: a weighted stream over registered query shapes that
-have a DuckDB oracle twin, read-only over a seeded TPC-H-like warehouse. Each shape's first result in a run is compared with its oracle
-under the compare protocol of ``tools/driver_gate.py``."""
+"""warehouse_queries: a round over registered query shapes that have a
+DuckDB oracle twin, read-only over a seeded TPC-H-like warehouse. Each
+shape's first result in a run is compared with its oracle under the compare
+protocol of ``tools/driver_gate.py``."""
 
 from __future__ import annotations
 
@@ -9,30 +10,31 @@ import sys
 import time
 
 import gen
-from common import median, tail
+from common import median, tail, unit_count
 
-# shape -> weight in a timed round, in stream order (modules interleaved)
-SHAPES = {
-    "pricing_summary": 2, "tpch_q6_forecast_revenue": 2, "shipping_priority_topk": 1,
-    "revenue_by_nation": 2, "tpch_q18_large_volume_customers": 1, "distinct_counts": 2,
-    "tpch_q9_product_profit": 1, "rollup_returns": 1, "nation_market_share": 1,
-    "order_fill_outer": 1, "tpch_q7_volume_shipping": 1, "events_json_extract": 1,
-    "customers_without_orders": 1, "tpch_q21_waiting_suppliers": 1,
-    "top_orders_per_customer": 1, "customer_running_spend": 1,
-}
+# one timed round: every shape once (the repo records no query mix to weight
+# them by), in one fixed stream order with the plan modules interleaved
+SHAPES = (
+    "pricing_summary", "tpch_q6_forecast_revenue", "shipping_priority_topk",
+    "revenue_by_nation", "tpch_q18_large_volume_customers", "distinct_counts",
+    "tpch_q9_product_profit", "rollup_returns", "nation_market_share",
+    "order_fill_outer", "tpch_q7_volume_shipping", "events_json_extract",
+    "customers_without_orders", "tpch_q21_waiting_suppliers",
+    "top_orders_per_customer", "customer_running_spend",
+)
+# nominal length of one round on a 4-core box, cold JVM included
+ROUND_S = 16.0
 SCALE = 0.01
 PLAN_MODULES = ("relational", "tpch", "advanced")
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def deck() -> list[str]:
-    """One timed round: every shape ``weight`` times, in one fixed order."""
-    return [s for s, w in SHAPES.items() for _ in range(w)]
+    """One timed round: every shape once, in one fixed order."""
+    return list(SHAPES)
 
 
 class WarehouseQueries:
-    name = "warehouse_queries"
-
     def __init__(self):
         self.lat: list[float] = []
         self.first: dict[str, tuple] = {}   # shape -> (columns, types, rows)
@@ -46,15 +48,17 @@ class WarehouseQueries:
     def install(self, ctx) -> None:
         pass
 
-    def run(self, ctx, seconds: float) -> None:
+    def units(self, seconds: float) -> int:
+        return unit_count(seconds, ROUND_S)
+
+    def run(self, ctx, rounds: int) -> None:
         from covid_19_data_engineering_spark.plans.registry import all_queries
 
         qs = all_queries()
         spark, tr = ctx.spark, ctx.tr
-        # whole rounds only, so every run times the same queries; the first
-        # round is also each shape's first pass in this JVM (compilation
+        # the first round is each shape's first pass in this JVM (compilation
         # included) and gives the results the check compares with the oracle
-        while self.spent < seconds:
+        for _ in range(rounds):
             for shape in deck():
                 self._one(spark, tr, qs, shape)
 
@@ -94,15 +98,16 @@ class WarehouseQueries:
                 ctx.fail(f"{shape}: {problem}")
         con.close()
 
-    def metrics(self, ctx) -> tuple[dict, dict]:
+    @property
+    def op_lat(self) -> list[float]:
+        return self.lat
+
+    def metrics(self, ctx) -> dict:
         t = tail(self.lat)
-        e2e = {"op_p50_s": median(self.lat), "op_tail_s": t["value"],
-               "items_per_s": len(self.lat) / self.spent}
-        side = {"query_p50_s": (median(self.lat), "s"),
+        return {"query_p50_s": (median(self.lat), "s"),
                 "query_tail_s": (t["value"], f"s@p{t['pct']},n={t['n']},beyond={t['beyond']}"),
                 "queries": (len(self.lat), "count"),
                 "shapes_checked": (len(self.first), "count")}
-        return e2e, side
 
     def layer_metrics(self, ctx) -> dict:
         tr = ctx.tr

@@ -3,7 +3,7 @@ applied to a Bloom-indexed versioned orders table. Each cycle makes one
 ``merge_versioned`` upsert, point lookups through ``read_versioned(point=)``,
 one ``read_versioned(prune=)`` range read and one
 ``incremental.refresh_sum_aggregate``; ``compact_versioned`` and
-``vacuum_versioned`` run every few cycles."""
+``vacuum_versioned`` run every few cycles and after the last one."""
 
 from __future__ import annotations
 
@@ -13,22 +13,22 @@ import time
 import numpy as np
 
 import gen
-from common import dir_bytes, median, tail
+from common import dir_bytes, median, tail, unit_count
 
 N_ROWS = 10_000
 N_FILES = 8
 BATCH = 100
-LOOKUPS = 6
+LOOKUPS = 20
 RANGE_WIDTH = 400
 MAINTAIN_EVERY = 2
+# nominal length of one cycle on a 4-core box
+CYCLE_S = 10.0
 KEY = "o_orderkey"
 SCHEMA = ("o_orderkey long, o_custkey long, o_orderstatus string, "
           "o_price_cents long, o_orderdate date")
 
 
 class VersionedUpserts:
-    name = "versioned_upserts"
-
     def __init__(self):
         self.model: dict[int, tuple] = {}
         self.merge_lat: list[float] = []
@@ -63,7 +63,10 @@ class VersionedUpserts:
     def install(self, ctx) -> None:
         pass
 
-    def run(self, ctx, seconds: float) -> None:
+    def units(self, seconds: float) -> int:
+        return unit_count(seconds, CYCLE_S)
+
+    def run(self, ctx, cycles: int) -> None:
         import pyspark.sql.functions as F
 
         from covid_19_data_engineering_spark.sources import incremental, versioned
@@ -78,8 +81,7 @@ class VersionedUpserts:
         next_key = N_ROWS
         n_cust = max(N_ROWS // 10, 1)
         rng = np.random.default_rng([ctx.seed, 909])
-        cycle = 0
-        while self.spent < seconds:
+        for cycle in range(cycles):
             batch = gen.make_cdc_batch(ctx.seed, cycle, len(self.model), next_key, BATCH, n_cust)
             updates = spark.createDataFrame(batch, SCHEMA)
             next_key += BATCH // 10
@@ -127,7 +129,7 @@ class VersionedUpserts:
                                                   "o_custkey", "o_price_cents")
             self._spend(self.refresh_lat, t0)
 
-            if cycle % MAINTAIN_EVERY == MAINTAIN_EVERY - 1:
+            if cycle % MAINTAIN_EVERY == MAINTAIN_EVERY - 1 or cycle == cycles - 1:
                 t0 = time.perf_counter()
                 with tr.span("versioned.compact"):
                     versioned.compact_versioned(spark, self.path, target_files=N_FILES)
@@ -135,8 +137,7 @@ class VersionedUpserts:
                     versioned.vacuum_versioned(self.path, keep_versions=2, retention_s=0.0)
                 self.spent += time.perf_counter() - t0
             tr.unit = {}
-            cycle += 1
-        self.cycles = cycle
+        self.cycles = cycles
 
     def _spend(self, lat: list[float], t0: float) -> None:
         dt = time.perf_counter() - t0
@@ -178,11 +179,13 @@ class VersionedUpserts:
                    versioned.snapshot_pruned_files(self.path, versioned.current_version(self.path)))
         self.stored_ratio = dir_bytes(self.path) / max(live, 1)
 
-    def metrics(self, ctx) -> tuple[dict, dict]:
+    @property
+    def op_lat(self) -> list[float]:
+        return self.lookup_lat
+
+    def metrics(self, ctx) -> dict:
         t = tail(self.lookup_lat)
-        e2e = {"op_p50_s": median(self.lookup_lat), "op_tail_s": t["value"],
-               "items_per_s": self.upserted / self.spent}
-        side = {"merge_p50_s": (median(self.merge_lat), "s"),
+        return {"merge_p50_s": (median(self.merge_lat), "s"),
                 "lookup_p50_s": (median(self.lookup_lat), "s"),
                 "lookup_tail_s": (t["value"], f"s@p{t['pct']},n={t['n']},beyond={t['beyond']}"),
                 "range_read_p50_s": (median(self.range_lat), "s"),
@@ -190,7 +193,6 @@ class VersionedUpserts:
                 "stored_bytes_per_live_byte": (self.stored_ratio, "ratio"),
                 "initial_write_s": (self.initial_write_s, "s"),
                 "cycles": (self.cycles, "count")}
-        return e2e, side
 
     def layer_metrics(self, ctx) -> dict:
         tr = ctx.tr
