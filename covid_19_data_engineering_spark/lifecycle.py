@@ -94,39 +94,37 @@ def promote(spark: SparkSession, schema: str, table: str,
     build = table + BUILD_SUFFIX
     if not table_exists(spark, schema, build):
         raise ValueError(f"no build table {qualified(schema, build)} to promote")
+    # catalog lookups only: ``spark.catalog.listTables`` would launch Spark
+    # jobs (it streams its result through ``toLocalIterator``) on every call
+    prod = qualified(schema, table)
+    prod_type = (spark.catalog.getTable(prod).tableType
+                 if table_exists(spark, schema, table) else None)
     if mode == "rename":
         # a prod name left as a view by an earlier atomic-mode promote needs
         # DROP VIEW (DROP TABLE refuses); mode switching stays legal
-        db = schema or spark.catalog.currentDatabase()
-        if any(t.name == table and t.tableType == "VIEW"
-               for t in spark.catalog.listTables(db)):
-            spark.sql(f"DROP VIEW IF EXISTS {qualified(schema, table)}")
+        if prod_type == "VIEW":
+            spark.sql(f"DROP VIEW IF EXISTS {prod}")
         drop_table(spark, schema, table)
-        spark.sql(
-            f"ALTER TABLE {qualified(schema, build)} RENAME TO {qualified(schema, table)}"
-        )
+        spark.sql(f"ALTER TABLE {qualified(schema, build)} RENAME TO {prod}")
         return
     if mode != "atomic":
         raise ValueError(f"unknown promote mode {mode!r}")
 
     db = schema or spark.catalog.currentDatabase()
     version_prefix = f"{table}__v"
+    shown = spark.sql(f"SHOW TABLES IN {db} LIKE '{version_prefix}*'").collect()
     versions = sorted(
-        int(t.name[len(version_prefix):])
-        for t in spark.catalog.listTables(db)
-        if t.name.startswith(version_prefix)
-        and t.name[len(version_prefix):].isdigit()
+        int(r.tableName[len(version_prefix):])
+        for r in shown
+        if r.tableName.startswith(version_prefix)
+        and r.tableName[len(version_prefix):].isdigit()
     )
     next_v = (versions[-1] + 1) if versions else 1
     versioned = f"{version_prefix}{next_v}"
     spark.sql(
         f"ALTER TABLE {qualified(schema, build)} RENAME TO {qualified(schema, versioned)}"
     )
-    prod = qualified(schema, table)
-    is_plain_table = any(
-        t.name == table and t.tableType != "VIEW" for t in spark.catalog.listTables(db)
-    )
-    if is_plain_table:
+    if prod_type is not None and prod_type != "VIEW":
         drop_table(spark, schema, table)  # one-time migration from rename mode
     # THE commit: a single catalog operation repoints production
     spark.sql(f"CREATE OR REPLACE VIEW {prod} AS SELECT * FROM {qualified(schema, versioned)}")

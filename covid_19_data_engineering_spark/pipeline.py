@@ -11,17 +11,33 @@
   only the last row of each CSV. This driver implements the evident intent —
   ALL rows land — and tests/test_pipeline.py pins that as a regression test.
 
-Every per-table unit of work is independent; at cluster scale the manifest
-loop can submit tables as concurrent jobs (scheduler pools) — sequential here
-for determinism, the plans are identical either way.
+Every per-table unit of work is independent, and a small table's load is
+bound by Spark job latency, not by data: each file is one input split, so
+each of its ~15 jobs is a single task. Both drivers therefore run each
+file's whole chain (land, infer, cast, write build, quarantine, count,
+promote) on one shared thread pool of width
+``min(len(csv_paths), sparkContext.defaultParallelism)``, so the jobs of
+different tables fill the cores together. Thread targets are wrapped with
+``pyspark.util.inheritable_thread_target(spark)``, so a job group or other
+local property the caller set labels the workers' jobs too. Results come
+back in manifest order. If any file fails, the error of the earliest
+failing file in manifest order is raised once every started load has
+ended, loads not yet started are cancelled, and no count validation runs;
+tables whose load finished stay promoted, as earlier tables did when the
+loop was sequential. Count validation runs only after every table is
+promoted. Each table's chain is the same sequence of plans either way, so
+the inferred schemas do not depend on the pool.
 """
 
 from __future__ import annotations
 
 import logging
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from covid_19_data_engineering_spark import lifecycle
 from covid_19_data_engineering_spark.inference import (
@@ -44,9 +60,9 @@ class LoadResult:
     inferred_schema: dict[str, str] = field(default_factory=dict)
 
 
-def _land_one(spark: SparkSession, csv_path: str, schema: str,
-              quarantine_schema: str | None = None) -> tuple[str, LoadResult, DataFrame]:
-    """CSV -> typed staging table. Returns (table, result, typed_df)."""
+def _load_daily_one(spark: SparkSession, csv_path: str, schema: str,
+                    quarantine_schema: str | None) -> LoadResult:
+    """CSV -> typed build table -> quarantine -> build count -> prod."""
     table = table_name_for(csv_path)
     good, bad = read_csv_landing(spark, csv_path)
     inferred = infer_table_schema(good)
@@ -60,7 +76,46 @@ def _land_one(spark: SparkSession, csv_path: str, schema: str,
                 lifecycle.qualified(quarantine_schema, f"{table}_quarantine")
             )
     n_good = spark.table(lifecycle.qualified(schema, table + lifecycle.BUILD_SUFFIX)).count()
-    return table, LoadResult(table, n_good, n_bad, inferred), typed
+    lifecycle.promote(spark, schema, table)
+    log.info("daily: %s loaded %d rows (%d quarantined)", table, n_good, n_bad)
+    return LoadResult(table, n_good, n_bad, inferred)
+
+
+def _load_quarterly_one(spark: SparkSession, csv_path: str, schema: str) -> LoadResult:
+    """CSV -> typed build table with load_time -> prod -> history snapshot."""
+    table = table_name_for(csv_path)
+    good, _ = read_csv_landing(spark, csv_path)
+    inferred = infer_table_schema(good)
+    typed = lifecycle.with_load_time(apply_inferred_schema(good, inferred))
+    lifecycle.write_build_table(spark, typed, schema, table)
+    lifecycle.promote(spark, schema, table)
+    lifecycle.snapshot_history(spark, schema, table)
+    n = spark.table(lifecycle.qualified(schema, table)).count()
+    log.info("quarterly: %s loaded %d rows + history snapshot", table, n)
+    return LoadResult(table, n, 0, inferred)
+
+
+def _load_concurrently(spark: SparkSession, csv_paths: list[str],
+                       load_one: Callable[[str], LoadResult]) -> list[LoadResult]:
+    """Run ``load_one`` per file on a pool of
+    ``min(len(csv_paths), defaultParallelism)`` threads; results in manifest
+    order. The earliest failure in manifest order is raised after every
+    started load has ended; loads not yet started are cancelled."""
+    tables = [table_name_for(p) for p in csv_paths]
+    twice = sorted({t for t in tables if tables.count(t) > 1})
+    if twice:
+        # two concurrent loads of one table would overwrite each other's build
+        raise ValueError(f"more than one file in the manifest lands as {twice}")
+    width = max(1, min(len(csv_paths), spark.sparkContext.defaultParallelism))
+    pool = ThreadPoolExecutor(max_workers=width, thread_name_prefix="table-load")
+    try:
+        # wrapped per file, in this thread: each worker starts from its own
+        # copy of the caller's local properties (job group included)
+        futures = [pool.submit(inheritable_thread_target(spark)(load_one), path)
+                   for path in csv_paths]
+        return [f.result() for f in futures]
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
 
 
 def backup_csv_files(csv_paths: list[str], backup_dir: str,
@@ -83,21 +138,16 @@ def backup_csv_files(csv_paths: list[str], backup_dir: str,
 
 def run_daily(spark: SparkSession, csv_paths: list[str], schema: str = "daily",
               quarantine: bool = True, backup_dir: str | None = None) -> list[LoadResult]:
-    """Daily load: backup -> land -> infer/cast -> promote -> validate."""
+    """Daily load: backup -> per table, concurrently: land -> infer/cast ->
+    promote; then validate every table's count."""
     lifecycle.ensure_schema(spark, schema)
     if backup_dir is not None:
         backup_csv_files(csv_paths, backup_dir)
-    results: list[LoadResult] = []
-    tables: list[str] = []
-    for path in csv_paths:
-        table, result, _ = _land_one(
-            spark, path, schema, quarantine_schema=schema if quarantine else None
-        )
-        lifecycle.promote(spark, schema, table)
-        results.append(result)
-        tables.append(table)
-        log.info("daily: %s loaded %d rows (%d quarantined)",
-                 table, result.rows_loaded, result.rows_quarantined)
+    quarantine_schema = schema if quarantine else None
+    results = _load_concurrently(
+        spark, csv_paths,
+        lambda path: _load_daily_one(spark, path, schema, quarantine_schema))
+    tables = [r.table for r in results]
     report = {r["table_name"]: r["row_count"]
               for r in lifecycle.count_report(spark, schema, tables).collect()}
     for r in results:
@@ -111,22 +161,12 @@ def run_daily(spark: SparkSession, csv_paths: list[str], schema: str = "daily",
 
 def run_quarterly(spark: SparkSession, csv_paths: list[str],
                   schema: str = "quarterly") -> list[LoadResult]:
-    """Quarterly load: land with load_time audit column -> promote ->
-    history snapshot (all rows — fixing the reference's last-row-only bug)."""
+    """Quarterly load, per table concurrently: land with load_time audit
+    column -> promote -> history snapshot (all rows — fixing the reference's
+    last-row-only bug)."""
     lifecycle.ensure_schema(spark, schema)
-    results: list[LoadResult] = []
-    for path in csv_paths:
-        table = table_name_for(path)
-        good, _ = read_csv_landing(spark, path)
-        inferred = infer_table_schema(good)
-        typed = lifecycle.with_load_time(apply_inferred_schema(good, inferred))
-        lifecycle.write_build_table(spark, typed, schema, table)
-        lifecycle.promote(spark, schema, table)
-        lifecycle.snapshot_history(spark, schema, table)
-        n = spark.table(lifecycle.qualified(schema, table)).count()
-        results.append(LoadResult(table, n, 0, inferred))
-        log.info("quarterly: %s loaded %d rows + history snapshot", table, n)
-    return results
+    return _load_concurrently(
+        spark, csv_paths, lambda path: _load_quarterly_one(spark, path, schema))
 
 
 def main(argv: list[str] | None = None) -> int:

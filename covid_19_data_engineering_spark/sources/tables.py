@@ -5,11 +5,26 @@ The driver materializes TPC-H-ish tables (plus ``events``/``documents``/
 each "file" would be a partitioned parquet dataset; ``spark.read.parquet``
 handles both transparently, and column pruning + predicate pushdown reach the
 scan either way.
+
+Schema memo: ``spark.read.parquet`` resolves a file's schema when the
+DataFrame is built, by a Spark job that reads the parquet footers (0.1-0.2 s
+each, paid inside every query builder). ``load_table`` keeps the resolved
+schema per session, in a ``weakref.WeakKeyDictionary`` keyed by the
+``SparkSession`` object (never by ``id()``, which a later session can
+reuse), and reads a memoized path with that schema supplied, which launches
+no job. Within a session the key is the absolute path plus the file's
+``(st_ino, st_size, st_mtime_ns)``, so a file rewritten in place, or a
+dataset directory Spark overwrote (a new directory), is resolved again. A
+path ``os.stat`` cannot reach (an object store URI) is read uncached. Each
+call still builds a fresh DataFrame, so two loads of one table in a plan
+are distinct relations, as before.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -20,6 +35,29 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# session -> {(abs path, st_ino, st_size, st_mtime_ns) -> resolved StructType}
+_SCHEMAS = weakref.WeakKeyDictionary()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the footer-schema job paid once per
+    session and file version (see the module docstring)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    path = os.path.abspath(path)
+    key = (path, st.st_ino, st.st_size, st.st_mtime_ns)
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(spark, {}).get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS.setdefault(spark, {})[key] = df.schema
+    return df
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
@@ -34,7 +72,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         # type: set the legacy flag so the nanos vintage at least loads, then
         # convert ONLY when the column actually read as bigint.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # Legacy vintage: ts is long nanos; convert to TimestampType at
         # microsecond precision (matches DuckDB's cast of TIMESTAMP_NS to

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -34,3 +35,26 @@ def duck():
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_ORACLE}/{name}.parquet')"
         )
     return con
+
+
+def _jobs_launched(spark, fn):
+    """Run ``fn()`` under a fresh job group on this thread; return
+    (Spark jobs it launched, its result). The thread's local properties are
+    restored afterwards."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    before = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for k, v in before.items():
+            sc.setLocalProperty(k, v)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+@pytest.fixture()
+def count_jobs():
+    """``count_jobs(spark, fn) -> (jobs launched by fn(), its result)``."""
+    return _jobs_launched

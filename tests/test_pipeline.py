@@ -165,7 +165,7 @@ def test_backup_csv_files(tmp_path):
 
 
 @pytest.mark.parametrize("mode", ["rename", "atomic"])
-def test_promote_swap_semantics_both_modes(spark, mode):
+def test_promote_swap_semantics_both_modes(spark, mode, count_jobs):
     """B9 swap parameterized over both commit protocols: reference-parity
     DROP+RENAME and the round-4 atomic view-pointer commit. Same observable
     contract: prod serves the new rows, the build name is released."""
@@ -175,13 +175,16 @@ def test_promote_swap_semantics_both_modes(spark, mode):
     lc.ensure_schema(spark, schema)
     v1 = spark.createDataFrame([(1, "old")], "id long, tag string")
     lc.write_build_table(spark, v1, schema, "t")
-    lc.promote(spark, schema, "t", mode=mode)
+    jobs_first, _ = count_jobs(spark, lambda: lc.promote(spark, schema, "t", mode=mode))
     assert {r["tag"] for r in spark.table(f"{schema}.t").collect()} == {"old"}
 
     v2 = spark.createDataFrame([(2, "new"), (3, "new")], "id long, tag string")
     lc.write_build_table(spark, v2, schema, "t")
-    lc.promote(spark, schema, "t", mode=mode)
+    jobs_swap, _ = count_jobs(spark, lambda: lc.promote(spark, schema, "t", mode=mode))
     assert {r["tag"] for r in spark.table(f"{schema}.t").collect()} == {"new"}
+    if mode == "rename":
+        # catalog operations only: promote never launches a Spark job
+        assert (jobs_first, jobs_swap) == (0, 0)
     assert not lc.table_exists(spark, schema, "t_build")
 
     if mode == "atomic":
@@ -193,23 +196,147 @@ def test_promote_swap_semantics_both_modes(spark, mode):
         assert len(versions) == 1
 
 
-def test_promote_mode_switching(spark):
+def test_promote_mode_switching(spark, count_jobs):
     """rename -> atomic migrates (drops the plain table once), atomic ->
-    rename drops the view; both directions end with correct prod rows."""
+    rename drops the view; both directions end with correct prod rows, and
+    a rename-mode promote launches no Spark job."""
     from covid_19_data_engineering_spark import lifecycle as lc
 
     schema = "promote_switch"
     lc.ensure_schema(spark, schema)
     lc.write_build_table(
         spark, spark.createDataFrame([(1,)], "id long"), schema, "t")
-    lc.promote(spark, schema, "t", mode="rename")
+    jobs, _ = count_jobs(spark, lambda: lc.promote(spark, schema, "t", mode="rename"))
+    assert jobs == 0
 
     lc.write_build_table(
         spark, spark.createDataFrame([(2,)], "id long"), schema, "t")
     lc.promote(spark, schema, "t", mode="atomic")
     assert [r["id"] for r in spark.table(f"{schema}.t").collect()] == [2]
+    assert spark.catalog.getTable(f"{schema}.t").tableType == "VIEW"
 
     lc.write_build_table(
         spark, spark.createDataFrame([(3,)], "id long"), schema, "t")
-    lc.promote(spark, schema, "t", mode="rename")
+    jobs, _ = count_jobs(spark, lambda: lc.promote(spark, schema, "t", mode="rename"))
+    assert jobs == 0
+    # the view the atomic promote left is dropped, a plain table takes its name
+    assert spark.catalog.getTable(f"{schema}.t").tableType != "VIEW"
     assert [r["id"] for r in spark.table(f"{schema}.t").collect()] == [3]
+
+
+# --- concurrent per-table loads ---------------------------------------------
+
+
+def _write_manifest(tmp_path, names):
+    """One small CSV per name, each with its own row count."""
+    paths = []
+    for i, name in enumerate(names):
+        rows = "".join(f"{k},v{k}\n" for k in range(1, 3 + i))
+        p = tmp_path / f"{name}.csv"
+        p.write_text("id,label\n" + rows)
+        paths.append(str(p))
+    return paths
+
+
+def _slow_promote_for(monkeypatch, slow_table, seconds, fail=False):
+    """Make ``lifecycle.promote`` of one table finish last (or fail late)."""
+    import time
+
+    inner = lifecycle.promote
+
+    def promote(spark, schema, table, *args, **kwargs):
+        if table == slow_table:
+            time.sleep(seconds)
+            if fail:
+                raise RuntimeError(f"promote of {table} failed")
+        return inner(spark, schema, table, *args, **kwargs)
+
+    monkeypatch.setattr(lifecycle, "promote", promote)
+
+
+def test_run_daily_results_in_manifest_order(spark, tmp_path, monkeypatch, count_jobs):
+    """Results follow the manifest even when the first table finishes last;
+    every table runs on a worker thread that carries the caller's job group,
+    and no PySpark warning about uninherited tags is raised."""
+    import threading
+    import warnings
+
+    from covid_19_data_engineering_spark import pipeline
+
+    names = ["t_zeta", "t_alpha", "t_mid", "t_beta", "t_omega"]
+    paths = _write_manifest(tmp_path, names)
+    _slow_promote_for(monkeypatch, "t_zeta", 0.5)
+    sc = spark.sparkContext
+    seen = []
+    inner = pipeline.infer_table_schema
+
+    def infer(df, *args, **kwargs):
+        seen.append((threading.current_thread() is threading.main_thread(),
+                     sc.getLocalProperty("spark.jobGroup.id")))
+        return inner(df, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "infer_table_schema", infer)
+
+    def load():
+        caller = sc.getLocalProperty("spark.jobGroup.id")
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            results = run_daily(spark, paths, schema="daily_order")
+        assert sc.getLocalProperty("spark.jobGroup.id") == caller
+        return caller, results, caught
+
+    jobs, (caller, results, caught) = count_jobs(spark, load)
+    assert [r.table for r in results] == names
+    assert [r.rows_loaded for r in results] == [2 + i for i in range(len(names))]
+    for r in results:
+        assert spark.table(f"daily_order.{r.table}").count() == r.rows_loaded
+    assert seen == [(False, caller)] * len(paths)
+    # the workers' jobs carry the group: each table's inference, build write
+    # and counts are Spark jobs
+    assert jobs >= 3 * len(paths)
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+
+    quarterly = run_quarterly(spark, paths[:2], schema="quart_order")
+    assert [r.table for r in quarterly] == names[:2]
+
+
+def test_run_daily_count_validation_raises_on_mismatch(spark, tmp_path, monkeypatch):
+    paths = _write_manifest(tmp_path, ["cv_a", "cv_b", "cv_c"])
+    inner = lifecycle.promote
+
+    def promote_then_append(spark, schema, table, *args, **kwargs):
+        inner(spark, schema, table, *args, **kwargs)
+        if table == "cv_b":  # prod gains a row the build count never saw
+            prod = lifecycle.qualified(schema, table)
+            spark.table(prod).limit(1).write.mode("append").insertInto(prod)
+
+    monkeypatch.setattr(lifecycle, "promote", promote_then_append)
+    with pytest.raises(RuntimeError, match="count validation failed for cv_b"):
+        run_daily(spark, paths, schema="daily_cv")
+
+
+def test_run_daily_raises_earliest_failure_in_manifest_order(spark, tmp_path, monkeypatch):
+    paths = _write_manifest(tmp_path, ["fail_late", "ok_one", "ok_two"])
+    paths.insert(2, str(tmp_path / "missing_file.csv"))
+    # the first file fails after the missing one has already failed
+    _slow_promote_for(monkeypatch, "fail_late", 0.5, fail=True)
+    reports = []
+    monkeypatch.setattr(lifecycle, "count_report",
+                        lambda *a, **k: reports.append(a) or pytest.fail("count ran"))
+    with pytest.raises(RuntimeError, match="promote of fail_late failed"):
+        run_daily(spark, paths, schema="daily_fail")
+    assert reports == []
+
+    # with the slow failure gone, the missing file is the earliest failure
+    monkeypatch.setattr(lifecycle, "promote", lambda *a, **k: None)
+    with pytest.raises(Exception, match="missing_file"):
+        run_daily(spark, paths, schema="daily_fail")
+    assert reports == []
+
+
+def test_run_daily_rejects_one_table_from_two_files(spark, tmp_path):
+    (tmp_path / "a").mkdir()
+    (tmp_path / "b").mkdir()
+    paths = [_write_manifest(tmp_path / d, ["Same_Name"])[0] for d in ("a", "b")]
+    with pytest.raises(ValueError, match="same_name"):
+        run_daily(spark, paths, schema="daily_twice")
